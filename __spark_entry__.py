@@ -498,20 +498,6 @@ def q_crawl_frontier_streaming(spark, sf_dir):
     return records.select("url", F.col("depth").cast("int").alias("depth"))
 
 
-def q_crawl_frontier_cuckoo(spark, sf_dir):
-    """The same frontier reachability under the cuckoo-filter URL-seen
-    backend (frontier/cuckoo.py — the north rule's second named
-    probabilistic structure): partitioned executor-resident fingerprint
-    tables + exact-array backstop must reproduce the recursive-CTE
-    reachability exactly, not just pass a parity golden."""
-    engine = _engine(spark, sf_dir, dedup=True, politeness=False,
-                     seen_mode="cuckoo", bloom_buckets=8)
-    records, _ = engine.run_crawl(
-        [f"{DOC_HOST}/d/0"], "li > a", extract_spec=None,
-        max_depth=CRAWL_MAX_DEPTH, max_rounds=CRAWL_MAX_DEPTH + 1)
-    return records.select("url", F.col("depth").cast("int").alias("depth"))
-
-
 PRIORITY_SEEDS = 24
 PRIORITY_SLOTS = 8
 PRIORITY_DEPTH = 2
@@ -2372,7 +2358,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "crawl_extract": q_crawl_extract,
         "crawl_frontier": q_crawl_frontier,
         "crawl_frontier_streaming": q_crawl_frontier_streaming,
-        "crawl_frontier_cuckoo": q_crawl_frontier_cuckoo,
         "crawl_frontier_priority": q_crawl_frontier_priority,
         "crawl_frontier_budget": q_crawl_frontier_budget,
         "redirect_resolve": q_redirect_resolve,
@@ -3560,7 +3545,6 @@ def oracle_sql() -> dict[str, str]:
         "crawl_extract": crawl_extract_sql,
         "crawl_frontier": crawl_frontier_sql,
         "crawl_frontier_streaming": crawl_frontier_sql,
-        "crawl_frontier_cuckoo": crawl_frontier_sql,
         "crawl_frontier_priority": _frontier_priority_sql(n_docs),
         "crawl_frontier_budget": _frontier_budget_sql(n_docs),
         "crawl_frontier_feedback": _frontier_feedback_sql(n_docs),

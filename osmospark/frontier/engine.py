@@ -2,7 +2,7 @@
 
 Per round (SURVEY §3.1 lifecycle):
 
-    frontier → [canonical ids] → dedup (Bloom prefilter + exact anti-join)
+    frontier → [canonical ids] → dedup (exact JVM anti-join + row_number)
              → politeness window (per-host slots via ranking window)
              → join pages corpus on url_hash (broadcast when small, AQE else)
              → extraction UDF (mapInPandas, page-scope chain execution)
@@ -17,8 +17,8 @@ Two execution modes:
   :239-280 sortKey).
 - ``run_crawl(seeds, follow, extract)`` — the 10^10-scale path: per-page
   extraction closes records locally; the frontier recurses on a follow
-  selector up to ``max_depth`` with URL-seen dedup (Bloom prefilter + exact
-  anti-join backstop) and per-host politeness. DFS-with-limit ordering:
+  selector up to ``max_depth`` with exact URL-seen dedup (JVM LEFT ANTI
+  join) and per-host politeness. DFS-with-limit ordering:
   admission prioritizes ``(depth DESC, sort lineage ASC)``, reproducing the
   reference's LIFO queue discipline (reference lib/Queue.js:24-33,
   index.js:253-258) at round granularity.
@@ -42,8 +42,6 @@ from ..extract import (
 from ..record import merge_value
 from ..spec import Chain, collect_chains
 from ..urlnorm import xxhash64_py
-from . import bloom as bloom_mod
-from . import cuckoo as cuckoo_mod
 from .politeness import (DEFAULT_CONCURRENCY, DEFAULT_ROUND_SECONDS,
                          host_slots)
 
@@ -71,24 +69,22 @@ FRONTIER_SCHEMA = StructType([
 
 _FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
-# executor-resident URL-seen state: one row per host bucket
-_STATE_SCHEMA = "bucket int, bitset binary, hashes binary"
-
 
 def _checkpoint_truncated(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint that also RESETS Catalyst's size statistics.
 
     ``Dataset.localCheckpoint`` preserves the pre-checkpoint plan's
     *estimated* stats in the resulting ``LogicalRDD`` (``originStats``),
-    and ``SizeInBytesOnlyStatsPlanVisitor.default`` estimates multi-child
-    nodes — including ``FlatMapCoGroupsInPandas`` — as the PRODUCT of the
-    children's ``sizeInBytes``. An iterative loop whose rounds cogroup two
-    previously-checkpointed frames (frontier × URL-seen state) therefore
-    compounds those products: the preserved ``sizeInBytes`` BigInteger's
-    bit-length grows Fibonacci-style per round, and by round ~14 Catalyst
-    burns minutes of driver CPU in ``BigInteger.multiplyToomCook3`` while
-    executors sit idle (measured: 3.5s → 150s/round on constant-size
-    data; jstack shows the planner inside ``multiplyToomCook3``).
+    and ``SizeInBytesOnlyStatsPlanVisitor`` estimates an inner join as the
+    PRODUCT of its children's ``sizeInBytes``. Every crawl round's fetch
+    join inner-joins the pages corpus with the admitted frontier, which
+    derives from the previous round's checkpointed output, so an
+    iterative loop compounds those products: the preserved
+    ``sizeInBytes`` BigInteger's bit-length grows every round, and by
+    round ~14 Catalyst burns minutes of driver CPU in
+    ``BigInteger.multiplyToomCook3`` while executors sit idle (measured:
+    3.5s → 150s/round on constant-size data; jstack shows the planner
+    inside ``multiplyToomCook3``).
 
     Rebuilding the DataFrame from the checkpointed RDD drops
     ``originStats`` — the fresh ``LogicalRDD`` reports the session default
@@ -119,14 +115,10 @@ class FrontierEngine:
         robots_df: DataFrame | None = None,
         dedup: bool = False,
         politeness_salt_buckets: int = 0,
-        seen_mode: str = "auto",
         seen_broadcast_keys: int = 4_000_000,
-        bloom_buckets: int = 32,
-        bloom_bits_per_bucket: int = 1 << 20,
         broadcast_threshold: int = 100_000,
         round_seconds: float = DEFAULT_ROUND_SECONDS,
         adaptive_shuffle: bool = True,
-        dedup_via: str = "window",
         follow_redirects: bool = True,
         max_redirects: int = 5,
         priority_df: DataFrame | None = None,
@@ -179,18 +171,7 @@ class FrontierEngine:
         self.robots_df = robots_df
         self.dedup = dedup
         self.politeness_salt_buckets = politeness_salt_buckets
-        if seen_mode not in ("auto", "bloom", "cuckoo"):
-            raise ValueError(f"seen_mode {seen_mode!r} not in "
-                             "('auto', 'bloom', 'cuckoo')")
-        self.seen_mode = seen_mode
-        # both probabilistic backends share the partitioned state-row
-        # machinery (probe cogroup, delta build, merge); they differ only
-        # in the per-bucket filter blob (Bloom bitset vs cuckoo
-        # fingerprint table — frontier/bloom.py vs frontier/cuckoo.py)
-        self._prob_seen = seen_mode in ("bloom", "cuckoo")
         self.seen_broadcast_keys = seen_broadcast_keys
-        self.bloom_buckets = bloom_buckets
-        self.bloom_bits = bloom_bits_per_bucket
         self.broadcast_threshold = broadcast_threshold
         self.round_seconds = round_seconds
         # iterative loops pay fixed task-launch latency per shuffle stage;
@@ -200,27 +181,13 @@ class FrontierEngine:
         # previous round's frontier size (the same job AQE would do at
         # runtime — re-enable AQE at true cluster scale instead).
         self.adaptive_shuffle = adaptive_shuffle
-        # within-round winner selection: 'window' (row_number) or 'agg'
-        # (groupBy + min_by on an order-key struct — map-side partial
-        # combine, no sort; see _dedup_round)
-        self.dedup_via = dedup_via
         self.metrics_rows: list[dict] = []
         self._pending_metrics: list[DataFrame] = []
-        # URL-seen state, partitioned by host bucket (north rule). Two
-        # structures per bucket: a Bloom bitset (cheap prefilter, the
-        # structure that persists at 10^10 scale) and a sorted exact hash
-        # array (the correctness backstop — crawl ordering must be exact).
-        # The state is a DataFrame of rows (bucket, bitset binary,
-        # hashes binary) living on the EXECUTORS (localCheckpoint blocks):
-        # probes and merges run co-partitioned via cogroup+applyInPandas,
-        # so the driver only ever holds the DataFrame handle — never
-        # per-URL data (SURVEY §4 item 2, §7.3). At 10^10 URLs size
-        # ``bloom_buckets`` so each bucket's exact array stays executor-
-        # memory-sized (e.g. 2^14 buckets → ~5 MB/bucket exact + bitset).
-        self._seen_state: DataFrame | None = None
-        # auto mode: the seen set is a list of per-round persisted key
-        # DataFrames (url_hash); dedup = JVM broadcast LEFT ANTI while the
-        # set fits `seen_broadcast_keys`, shuffle anti-join (AQE) beyond.
+        # URL-seen set: a list of per-round key DataFrames (url_hash)
+        # living on the EXECUTORS (checkpointed blocks — the driver holds
+        # only handles, never per-URL data); dedup = JVM broadcast LEFT
+        # ANTI while the set fits `seen_broadcast_keys`, shuffle anti-join
+        # (AQE) beyond. Exact, so the visit set matches the reference.
         # Deltas are never re-stored — each round persists only its own
         # keys; parts compact every ``seen_compact_parts`` rounds so deep
         # crawls never accumulate unbounded union lineage.
@@ -359,219 +326,64 @@ class FrontierEngine:
         return self.spark.createDataFrame(norm, schema=FRONTIER_SCHEMA)
 
     def _dedup_round(self, frontier: DataFrame):
-        """URL-seen dedup in ONE shuffle + ONE vectorized Python pass:
+        """URL-seen dedup, entirely JVM-side (no Python touches the
+        frontier):
 
+        - cross-round: LEFT ANTI join against the union of per-round
+          seen key DataFrames — broadcast (one hashed relation per
+          executor) while the seen set fits ``seen_broadcast_keys``,
+          shuffle anti-join that AQE can skew-split beyond. It runs
+          BEFORE the window so already-seen rows never enter the shuffle;
         - within-round repeats collapse to the DETERMINISTIC winner — the
           highest-priority row by the admission order (depth DESC,
-          sort_index ASC, referer ASC); a bare dropDuplicates would keep an
-          arbitrary row, making visit order differ between a resumed and a
-          one-shot crawl (the only shuffle);
-        - cross-round seen filtering has two backends:
-          * ``auto`` (default): JVM-side LEFT ANTI join against the union of
-            per-round persisted key DataFrames — broadcast (one hashed
-            relation per executor, built JVM-side, no Python involved) while
-            the seen set fits ``seen_broadcast_keys``, shuffle anti-join that
-            AQE can skew-split beyond. The anti-join runs BEFORE the window
-            so already-seen rows never enter the shuffle.
-          * ``bloom``: the partitioned Bloom + exact-array probe — the
-            frontier cogroups with the EXECUTOR-RESIDENT state table on the
-            host bucket (``cogroup(...).applyInPandas``), so each bucket's
-            blobs meet its frontier rows co-partitioned, once, with no
-            driver round-trip and no per-row blob duplication (a plain join
-            would copy the bucket blob onto every frontier row).
-            Bloom-NEGATIVE rows are *definitely new*; Bloom-POSITIVE rows
-            are verified against the bucket's exact sorted hash array
-            (``searchsorted``), the backstop that keeps the visit set exact
-            despite Bloom false positives.
+          sort_index ASC, referer ASC) via ``row_number``; a bare
+          dropDuplicates would keep an arbitrary row, making visit order
+          differ between a resumed and a one-shot crawl (the only
+          shuffle).
         """
-        if not self._prob_seen and self._seen_parts:
+        if self._seen_parts:
             seen = self._seen_parts[0]
             for p in self._seen_parts[1:]:
                 seen = seen.unionByName(p)
             if self._seen_count <= self.seen_broadcast_keys:
                 seen = F.broadcast(seen)
             frontier = frontier.join(seen, "url_hash", "left_anti")
-        if self._prob_seen and self._seen_state is not None:
-            frontier = self._probe_seen_state(frontier)
-        if self.dedup_via == "window":
-            w = Window.partitionBy("url_hash").orderBy(
-                F.col("depth").desc(),
-                F.col("sort_index").asc_nulls_last(),
-                F.col("referer").asc_nulls_first(),
-            )
-            return (frontier.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1).drop("_rn"))
-        # 'agg': same winner via groupBy + min_by on an order-key struct —
-        # hash aggregation with MAP-SIDE partial combine, so in-round
-        # duplicate links collapse before the shuffle and no per-partition
-        # sort runs (the window must sort every partition). Struct fields
-        # encode the window's exact order: depth DESC (negated),
-        # sort_index ASC NULLS LAST (coalesce to max), referer ASC NULLS
-        # FIRST (null-flag field then value); trailing full-row fields
-        # make the key a total order, so ties that the window breaks
-        # arbitrarily are deterministic here.
-        cols = frontier.columns
-        key = F.struct(
-            (-F.col("depth")).alias("_d"),
-            F.coalesce(F.col("sort_index"),
-                       F.lit(2**63 - 1)).alias("_s"),
-            F.col("referer").isNotNull().cast("int").alias("_rn"),
-            F.coalesce(F.col("referer"), F.lit("")).alias("_r"),
-            *[F.col(c).alias(f"_t{i}") for i, c in enumerate(cols)
-              if c not in ("depth", "sort_index", "referer", "url_hash")],
+        w = Window.partitionBy("url_hash").orderBy(
+            F.col("depth").desc(),
+            F.col("sort_index").asc_nulls_last(),
+            F.col("referer").asc_nulls_first(),
         )
-        return (frontier.groupBy("url_hash")
-                .agg(F.min_by(F.struct(*cols), key).alias("_w"))
-                .select("_w.*"))
-
-    def _probe_seen_state(self, frontier: DataFrame) -> DataFrame:
-        """Filter already-seen rows against the partitioned state table.
-
-        Plan shape: frontier shuffles once on the host bucket;
-        the state side is n_buckets rows read from localCheckpoint blocks.
-        Python sees one (frontier_pdf, state_pdf) pair per bucket."""
-        schema = frontier.schema
-        cols = [f.name for f in schema.fields]
-        tagged = frontier.withColumn("_bucket", self._bucket_col())
-        mode = self.seen_mode
-
-        def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-            left = left.drop(columns=["_bucket"])
-            if len(left) == 0 or len(right) == 0:
-                return left
-            ex = np.frombuffer(right["hashes"].iloc[0], dtype=np.int64)
-            hashes = left["url_hash"].to_numpy(dtype=np.int64)
-            if mode == "cuckoo":
-                maybe = cuckoo_mod.contains(
-                    cuckoo_mod.from_bytes(right["bitset"].iloc[0]), hashes)
-            else:
-                bl = np.frombuffer(right["bitset"].iloc[0], dtype=np.uint8)
-                maybe = bloom_mod.contains(bl, hashes)
-            seen = np.zeros(len(left), dtype=bool)
-            if maybe.any() and len(ex):
-                cand = hashes[maybe]
-                pos = np.searchsorted(ex, cand)
-                pos = np.clip(pos, 0, len(ex) - 1)
-                seen[maybe] = ex[pos] == cand
-            return left[~seen]
-
-        return (tagged.groupBy("_bucket")
-                .cogroup(self._seen_state.groupBy("bucket"))
-                .applyInPandas(probe, schema)
-                .select(*cols))
-
-    def _bucket_col(self):
-        """Host bucket of a frontier row — JVM-side, identical on the probe
-        and update paths (F.xxhash64 == urlnorm.xxhash64_py, seed 42)."""
-        return F.pmod(
-            F.xxhash64(F.coalesce(F.col("host"), F.lit(""))),
-            F.lit(self.bloom_buckets)).cast("int")
+        return (frontier.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn"))
 
     def _note_seen(self, admitted: DataFrame,
                    n_rows: int | None = None) -> None:
-        """Fold this round's admitted URLs into the URL-seen state.
-
-        ``auto`` backend: persist just this round's key column as a new seen
-        part (materialized while the admitted rows are still cached, so the
-        part never recomputes through the dedup/politeness pipeline).
-
-        ``bloom`` backend: deltas are built distributively (one row per host
-        bucket via applyInPandas: Bloom bitset + sorted hash array) so only
-        ``n_buckets`` delta rows — not per-URL rows — cross stages; they
-        merge into the executor-resident state table via a co-partitioned
-        cogroup (bitset OR + sorted-array union), and the new state
-        checkpoints eagerly. The driver never touches per-URL data — it
-        only swaps the DataFrame handle."""
-        if not self._prob_seen:
-            if n_rows is not None:
-                # fast path: ``admitted`` is already a filter over
-                # checkpointed blocks — its select is lineage-stable with
-                # zero extra jobs; the caller supplies the exact count.
-                self._seen_parts.append(admitted.select("url_hash"))
-                self._seen_count += n_rows
-            else:
-                # slow path (resume rebuild): checkpoint — NOT persist — so
-                # the part never recomputes through upstream lineage the
-                # caller may later unpersist/invalidate (quadratic).
-                part = _checkpoint_truncated(
-                    admitted.select("url_hash"))
-                self._seen_count += part.count()
-                self._seen_parts.append(part)
-            if len(self._seen_parts) >= self.seen_compact_parts:
-                # compaction: deep crawls would otherwise union one part
-                # per round — linear lineage and one scan-leaf per round.
-                # One merged checkpoint every K rounds keeps the anti-join
-                # a single leaf; total recheckpoint cost is O(seen·R/K).
-                merged = self._seen_parts[0]
-                for p in self._seen_parts[1:]:
-                    merged = merged.unionByName(p)
-                self._seen_parts = [_checkpoint_truncated(merged)]
-            return
-        bits = self.bloom_bits
-        mode = self.seen_mode
-
-        def build_delta(pdf: pd.DataFrame) -> pd.DataFrame:
-            import numpy as np
-            hashes = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
-            if mode == "cuckoo":
-                blob = cuckoo_mod.build(hashes).tobytes()
-            else:
-                bs = bloom_mod.empty_bitset(bits)
-                bloom_mod.add(bs, hashes)
-                blob = bs.tobytes()
-            return pd.DataFrame(
-                {"bucket": [int(pdf["bucket"].iloc[0])],
-                 "bitset": [blob],
-                 "hashes": [hashes.tobytes()]})
-
-        deltas = (
-            admitted.select("url_hash", self._bucket_col().alias("bucket"))
-            .groupBy("bucket")
-            .applyInPandas(build_delta, _STATE_SCHEMA)
-        )
-        if self._seen_state is None:
-            new_state = deltas
+        """Fold this round's admitted URLs into the URL-seen set: append
+        just this round's key column as a new seen part (taken while the
+        admitted rows are still checkpointed, so the part never
+        recomputes through the dedup/politeness pipeline)."""
+        if n_rows is not None:
+            # fast path: ``admitted`` is already a filter over
+            # checkpointed blocks — its select is lineage-stable with
+            # zero extra jobs; the caller supplies the exact count.
+            self._seen_parts.append(admitted.select("url_hash"))
+            self._seen_count += n_rows
         else:
-            def merge_state(left: pd.DataFrame,
-                            right: pd.DataFrame) -> pd.DataFrame:
-                import numpy as np
-                rows = pd.concat([left, right], ignore_index=True)
-                if len(rows) <= 1:
-                    return rows
-                ex0 = np.frombuffer(rows["hashes"].iloc[0], dtype=np.int64)
-                ex = ex0
-                for i in range(1, len(rows)):
-                    ex = np.union1d(ex, np.frombuffer(
-                        rows["hashes"].iloc[i], dtype=np.int64))
-                if mode == "cuckoo":
-                    # insert only the genuinely-new keys into row 0's
-                    # table; saturation (add_many -> None) rebuilds at
-                    # the next power-of-two size from the exact array,
-                    # so the filter can never report a false negative
-                    t = cuckoo_mod.from_bytes(rows["bitset"].iloc[0])
-                    t = cuckoo_mod.add_many(t, np.setdiff1d(ex, ex0))
-                    if t is None:
-                        t = cuckoo_mod.build(ex)
-                    blob = t.tobytes()
-                else:
-                    bs = np.frombuffer(rows["bitset"].iloc[0],
-                                       dtype=np.uint8).copy()
-                    for i in range(1, len(rows)):
-                        bs |= np.frombuffer(rows["bitset"].iloc[i],
-                                            dtype=np.uint8)
-                    blob = bs.tobytes()
-                return pd.DataFrame({
-                    "bucket": [int(rows["bucket"].iloc[0])],
-                    "bitset": [blob], "hashes": [ex.tobytes()]})
-
-            new_state = (self._seen_state.groupBy("bucket")
-                         .cogroup(deltas.groupBy("bucket"))
-                         .applyInPandas(merge_state, _STATE_SCHEMA))
-        # eager: materialize the new state from the old checkpoint blocks
-        # BEFORE dropping the old handle (ContextCleaner then reclaims the
-        # old blocks). One bounded job per round: n_buckets rows.
-        self._seen_state = _checkpoint_truncated(new_state)
+            # slow path (resume rebuild): checkpoint — NOT persist — so
+            # the part never recomputes through upstream lineage the
+            # caller may later unpersist/invalidate (quadratic).
+            part = _checkpoint_truncated(admitted.select("url_hash"))
+            self._seen_count += part.count()
+            self._seen_parts.append(part)
+        if len(self._seen_parts) >= self.seen_compact_parts:
+            # compaction: deep crawls would otherwise union one part
+            # per round — linear lineage and one scan-leaf per round.
+            # One merged checkpoint every K rounds keeps the anti-join
+            # a single leaf; total recheckpoint cost is O(seen·R/K).
+            merged = self._seen_parts[0]
+            for p in self._seen_parts[1:]:
+                merged = merged.unionByName(p)
+            self._seen_parts = [_checkpoint_truncated(merged)]
 
     def _rewrite_urls(self, frontier: DataFrame) -> DataFrame:
         """Apply per-host DUST param-strip rules (url_rewrites_df), then
@@ -1089,12 +901,12 @@ class FrontierEngine:
         """Seed → extract → follow recursion with URL-seen dedup, robots,
         politeness and DFS-priority admission. Records close per page (no
         cross-page record trees), so nothing is ever collected to the
-        driver except per-round counts and bucket-sized Bloom deltas.
+        driver except per-round counts.
 
         Resume: pass ``resume_frontier`` (the last committed frontier round)
         and ``start_round``; with a state TableIO attached, the URL-seen set
-        (exact + Bloom) is rebuilt from the committed ``seen`` table so the
-        resumed crawl never re-visits.
+        is rebuilt from the committed ``seen`` table so the resumed crawl
+        never re-visits.
 
         Returns (records_df(url, depth, value_json), visit_rounds) where
         visit_rounds is the per-round admitted visit log metadata."""
@@ -1108,9 +920,7 @@ class FrontierEngine:
             if self.dedup and self.state is not None:
                 prior = self.state.read_all("seen")
                 if prior is not None:
-                    # seen table persists (url_hash, host): host keys the
-                    # URL-seen bucket, so rebuild must bucket identically
-                    self._note_seen(prior.select("url_hash", "host"))
+                    self._note_seen(prior)
         else:
             seeds = [
                 {"url": canonicalize(u), "depth": 0, "sort_index": i,
@@ -1139,7 +949,7 @@ class FrontierEngine:
                                    respect_meta_robots=respect_meta_robots)
 
         # Each round is exactly TWO substantial jobs, both fully parallel:
-        #   A. admission pipeline (seen anti-join/probe → within-round window
+        #   A. admission pipeline (seen anti-join → within-round window
         #      winner → robots → politeness ranking) → localCheckpoint
         #   B. fetch join + extraction UDF → localCheckpoint
         # plus O(1) block-scan counts. No persist/unpersist dance: every
@@ -1189,7 +999,9 @@ class FrontierEngine:
                     self._note_seen(admitted, n_rows=n_admitted)
                     if self.state is not None:
                         # persist the round's admitted ids so a resumed crawl
-                        # rebuilds the URL-seen buckets (north rule: resumable)
+                        # rebuilds the URL-seen set (north rule: resumable);
+                        # the rebuild reads only url_hash, but host stays in
+                        # the table so existing checkpoints keep one schema
                         self.state.commit_round(
                             "seen", round_no, admitted.select("url_hash", "host"))
                 phase_t["seen_update"] = round(_time.perf_counter() - t0, 2)

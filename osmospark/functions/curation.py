@@ -899,9 +899,10 @@ def mixture_plan(documents: DataFrame, weights: DataFrame,
     NULL-handling discipline of ``ccnet_buckets``; a NULL domain groups
     as its own row the same way.
     """
-    toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    toks = F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)) \
-            .otherwise(toks)
+    # NULL text is 0 tokens: with ANSI off size(split(NULL)) is -1
+    text = F.col(text_col)
+    toks = F.when(text.isNull() | (F.length(F.trim(text)) == 0), F.lit(0)) \
+            .otherwise(F.size(F.split(F.trim(text), r"\s+")))
     avail = (documents
              .groupBy(F.col(domain_col).alias("domain"))
              .agg(F.count("*").alias("n_docs"),

@@ -53,12 +53,6 @@ def parse_args(argv):
     p.add_argument("--politeness", action="store_true")
     p.add_argument("--concurrency", type=int, default=5)
     p.add_argument("--no-dedup", action="store_true")
-    p.add_argument("--seen-mode", default="auto",
-                   choices=["auto", "bloom", "cuckoo"],
-                   help="URL-seen backend: exact anti-join, partitioned "
-                        "Bloom, or partitioned cuckoo filter")
-    p.add_argument("--seen-buckets", type=int, default=32,
-                   help="host buckets for the bloom/cuckoo state table")
     p.add_argument("--robots", default=None,
                    help="parquet path of (host, robots_txt); compiled to "
                         "RFC 9309 rules + crawl-delay budgets")
@@ -174,8 +168,6 @@ def main(argv=None):
         dedup=not args.no_dedup,
         politeness=args.politeness,
         concurrency=args.concurrency,
-        seen_mode=args.seen_mode,
-        bloom_buckets=args.seen_buckets,
         robots_df=robots_df,
         broadcast_threshold=args.broadcast_threshold,
         max_redirects=args.max_redirects)

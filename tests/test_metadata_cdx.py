@@ -46,6 +46,22 @@ def test_extract_metadata_robots_none_token():
     assert ni and nf
 
 
+def test_robots_flags_space_separated_directives():
+    """Robots content lists directives separated by commas, whitespace
+    or both ("noindex nofollow", "noindex,  nofollow", "NOINDEX,NOFOLLOW");
+    every form yields the same token set."""
+    from osmospark.functions.metadata import robots_flags, robots_tokens
+    for content in ("noindex nofollow", "noindex,  nofollow",
+                    "NOINDEX,NOFOLLOW", " noindex\tnofollow ",
+                    "noindex , nofollow,"):
+        assert robots_tokens(content) == {"noindex", "nofollow"}, content
+        assert robots_flags(content) == (True, True), content
+    assert robots_flags("index follow") == (False, False)
+    html = '<head><meta name="robots" content="noindex nofollow"></head>'
+    _, _, ni, nf, _ = extract_metadata("http://h.test/", html)
+    assert ni and nf
+
+
 def test_extract_metadata_hostile_inputs():
     # NULL/empty html -> all-NULL row, no exception
     assert extract_metadata("http://h.test/", "") == (
@@ -169,6 +185,25 @@ def test_mixture_plan_zero_avail_no_division_error(spark):
                                     "source string, weight_permille long")
     row = mixture_plan(docs, weights, 100).collect()[0]
     assert row["avail_tokens"] == 0 and row["epochs_permille"] == 0
+
+
+def test_mixture_plan_null_text_counts_zero_tokens(spark):
+    """A NULL text contributes 0 tokens with ANSI mode off too, where
+    size(split(NULL)) is -1 rather than NULL."""
+    docs = spark.createDataFrame(
+        [(0, "one two", "d"), (1, None, "d"), (2, None, "n")],
+        "doc_id long, text string, source string")
+    weights = spark.createDataFrame([("d", 500), ("n", 500)],
+                                    "source string, weight_permille long")
+    prev = spark.conf.get("spark.sql.ansi.enabled")
+    try:
+        for ansi in ("false", "true"):
+            spark.conf.set("spark.sql.ansi.enabled", ansi)
+            got = {r["domain"]: (r["n_docs"], r["avail_tokens"])
+                   for r in mixture_plan(docs, weights, 100).collect()}
+            assert got == {"d": (2, 2), "n": (1, 0)}, (ansi, got)
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", prev)
 
 
 def test_mixture_plan_broadcasts_weights(spark):

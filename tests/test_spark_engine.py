@@ -92,26 +92,15 @@ def test_crawl_mode_dedup_and_depth(spark):
     assert sorted(urls) == sorted(r.url for r in records2.collect())
 
 
-def test_dedup_agg_identical_to_window(spark):
-    """The min_by group-agg winner must equal the window winner row for
-    row (beyond the crawl-level visit-set check): same crawl, byte-equal
-    records, plus a direct _dedup_round comparison on a frontier with
-    duplicate urls, null sort_index/referer, and depth conflicts."""
-    pages = synth_corpus(n_urls=60, n_hosts=4)
+def test_dedup_window_picks_deterministic_winner(spark):
+    """Within-round repeats of one url collapse to the admission-order
+    winner — depth DESC, sort_index ASC NULLS LAST, referer ASC NULLS
+    FIRST — on a hand-built frontier with duplicate urls, null
+    sort_index/referer, and depth conflicts."""
+    pages = synth_corpus(n_urls=20, n_hosts=2)
     pages_df = spark.createDataFrame(
         pages_rows(pages),
         "url string, warc_ts timestamp, html binary, text string, lang string")
-    seeds = seed_urls(pages)
-    outs = {}
-    for via in ("window", "agg"):
-        eng = FrontierEngine(spark, pages_df, dedup=True, dedup_via=via)
-        records, _ = eng.run_crawl(
-            seeds, "li > a", extract_spec={"payload": "div"}, max_depth=3)
-        outs[via] = sorted((r.url, r.depth, r.value_json)
-                           for r in records.collect())
-    assert outs["window"] == outs["agg"]
-
-    # direct comparison on a hand-built frontier exercising the order keys
     rows = [
         # same url: depth DESC wins
         {"url": "http://h/a", "depth": 1, "sort_index": 5, "referer": "r1"},
@@ -131,17 +120,46 @@ def test_dedup_agg_identical_to_window(spark):
                  root_id=None, **r) for r in rows]
     from osmospark.frontier.engine import FRONTIER_SCHEMA
     fr = spark.createDataFrame(base, FRONTIER_SCHEMA)
-    picked = {}
-    for via in ("window", "agg"):
-        eng = FrontierEngine(spark, pages_df, dedup=True, dedup_via=via)
-        picked[via] = sorted(
-            (r.url, r.depth, r.sort_index, r.referer)
-            for r in eng._dedup_round(fr).collect())
-    assert picked["window"] == picked["agg"]
-    by_url = {u: (d, s, ref) for u, d, s, ref in picked["agg"]}
+    eng = FrontierEngine(spark, pages_df, dedup=True)
+    picked = [(r.url, r.depth, r.sort_index, r.referer)
+              for r in eng._dedup_round(fr).collect()]
+    by_url = {u: (d, s, ref) for u, d, s, ref in picked}
+    assert len(picked) == len(by_url) == 3
     assert by_url["http://h/a"] == (2, 9, "r2")
     assert by_url["http://h/b"] == (1, 3, "y")
     assert by_url["http://h/c"] == (0, 1, None)
+
+
+def test_admission_plan_is_jvm_anti_join(spark, monkeypatch):
+    """URL-seen dedup runs without Python: from round 1 on (when a seen
+    set exists) the checkpointed admission plan of a polite, deduping
+    crawl holds a LEFT ANTI join against the seen keys and no pandas
+    grouped/cogrouped apply or Arrow Python UDF node."""
+    from osmospark.frontier import engine as engine_mod
+
+    pages = synth_corpus(n_urls=40, n_hosts=2)
+    pages_df = spark.createDataFrame(
+        pages_rows(pages),
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    plans = []
+    real = engine_mod._checkpoint_truncated
+
+    def recording(df):
+        if "_rank" in df.columns:  # the admission frame of a round
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return real(df)
+
+    monkeypatch.setattr(engine_mod, "_checkpoint_truncated", recording)
+    eng = FrontierEngine(spark, pages_df, dedup=True, politeness=True,
+                         concurrency=2)
+    eng.run_crawl(seed_urls(pages), "li > a", extract_spec=None,
+                  max_depth=3, max_rounds=3)
+    assert len(plans) >= 2
+    for plan in plans[1:]:
+        assert "LeftAnti" in plan, plan
+        for node in ("FlatMapCoGroupsInPandas", "FlatMapGroupsInPandas",
+                     "ArrowEvalPython"):
+            assert node not in plan, plan
 
 
 def test_crawl_mode_politeness_defers(spark):

@@ -195,8 +195,7 @@ spark.sparkContext.setLogLevel("ERROR")
 pages = synth_corpus_df(spark, 800, 6, weight=1).cache()
 pages.count()
 io = TableIO({state!r}, spark)
-eng = FrontierEngine(spark, pages, state=io, dedup=True, politeness=True,
-                     seen_mode={seen_mode!r})
+eng = FrontierEngine(spark, pages, state=io, dedup=True, politeness=True)
 eng.run_crawl(synth_seed_urls(6), "li > a",
               extract_spec={{"payload": "div"}}, max_depth=6, max_rounds=2)
 # hard stop: every executor-resident structure (localCheckpoint blocks,
@@ -207,16 +206,13 @@ print("PHASE1_OK")
 """
 
 
-@pytest.mark.parametrize("seen_mode", ["auto", "bloom", "cuckoo"])
-def test_crawl_survives_total_executor_state_loss(spark, tmp_path,
-                                                 seen_mode):
+def test_crawl_survives_total_executor_state_loss(spark, tmp_path):
     """Lost-executor recovery (north rule: resumable from checkpoint):
     phase 1 crawls 2 rounds in a SEPARATE process and kills its JVM —
     losing all localCheckpoint blocks, the structures Spark neither
     replicates nor recomputes. A fresh session must resume purely from
     the committed seen/frontier tables and finish with EXACTLY the
-    one-shot visit set (no lost pages, no re-visits), under both seen
-    backends."""
+    one-shot visit set (no lost pages, no re-visits)."""
     import os
     import subprocess
     import sys
@@ -227,8 +223,7 @@ def test_crawl_survives_total_executor_state_loss(spark, tmp_path,
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     state = str(tmp_path / "s")
-    script = _CRASH_PHASE1.format(repo=repo, state=state,
-                                  seen_mode=seen_mode)
+    script = _CRASH_PHASE1.format(repo=repo, state=state)
     proc = subprocess.run([sys.executable, "-c", script],
                           capture_output=True, text=True, timeout=600)
     assert "PHASE1_OK" in proc.stdout, proc.stderr[-2000:]
@@ -241,14 +236,13 @@ def test_crawl_survives_total_executor_state_loss(spark, tmp_path,
     last = io2.last_round("frontier")
     assert last >= 0
     eng2 = FrontierEngine(spark, pages, state=io2, dedup=True,
-                          politeness=True, seen_mode=seen_mode)
+                          politeness=True)
     rec2, _ = eng2.run_crawl(
         [], "li > a", extract_spec=spec, max_depth=6, max_rounds=2,
         resume_frontier=io2.read_round("frontier", last),
         start_round=last + 1)
 
-    eng3 = FrontierEngine(spark, pages, dedup=True, politeness=True,
-                          seen_mode=seen_mode)
+    eng3 = FrontierEngine(spark, pages, dedup=True, politeness=True)
     rec3, _ = eng3.run_crawl(synth_seed_urls(6), "li > a",
                              extract_spec=spec, max_depth=6, max_rounds=4)
     resumed = {r.url for r in rec2.select("url").collect()}
@@ -286,33 +280,6 @@ def test_metrics_commit_to_state_table_not_driver(spark, tmp_path):
     assert sum(r["fetched"] for r in eng2.metrics_rows) == fetched
 
 
-def test_bloom_mode_matches_auto_and_keeps_state_off_driver(spark):
-    """seen_mode='bloom': the URL-seen structure lives in an
-    executor-resident state DataFrame of (bucket, bitset, hashes) rows —
-    the driver holds ONLY the handle, no per-URL data — and the visit set
-    is identical to auto (exact anti-join) mode."""
-    from osmospark.corpus import synth_corpus_df, synth_seed_urls
-    from osmospark.frontier import FrontierEngine
-
-    pages = synth_corpus_df(spark, 400, 4, weight=1).cache()
-    pages.count()
-    seeds = synth_seed_urls(4)
-    auto = FrontierEngine(spark, pages, dedup=True)
-    rec_a, _ = auto.run_crawl(seeds, "li > a", extract_spec=None,
-                              max_depth=4)
-    blm = FrontierEngine(spark, pages, dedup=True, seen_mode="bloom",
-                         bloom_buckets=8)
-    rec_b, _ = blm.run_crawl(seeds, "li > a", extract_spec=None,
-                             max_depth=4)
-    urls_a = {r.url for r in rec_a.select("url").collect()}
-    urls_b = {r.url for r in rec_b.select("url").collect()}
-    assert urls_a == urls_b and len(urls_a) > 10
-    # no per-URL state structure on the driver (the round-1 weakness):
-    assert not hasattr(blm, "_bloom") and not hasattr(blm, "_exact")
-    state_rows = blm._seen_state.count()
-    assert 0 < state_rows <= 8  # one row per host bucket, nothing else
-
-
 def test_seen_part_compaction_bounds_parts_and_preserves_visits(spark):
     """auto mode: per-round seen parts compact every K rounds so deep
     crawls never accumulate one union leaf per round."""
@@ -333,14 +300,11 @@ def test_seen_part_compaction_bounds_parts_and_preserves_visits(spark):
     assert len(v1) == len(v2)
 
 
-@pytest.mark.parametrize("seen_mode", ["auto", "bloom", "cuckoo"])
-def test_crawl_resume_matches_one_shot(spark, tmp_path, seen_mode):
+def test_crawl_resume_matches_one_shot(spark, tmp_path):
     """North rule: any round is resumable. A crawl interrupted after k
     rounds and resumed from the committed frontier + seen state must visit
     EXACTLY the set a one-shot crawl visits (URL-seen rebuild buckets
-    identically; within-round dedup picks the deterministic winner).
-    Runs under both seen backends (exact anti-join and the partitioned
-    Bloom+exact state table)."""
+    identically; within-round dedup picks the deterministic winner)."""
     from osmospark.corpus import synth_corpus_df, synth_seed_urls
     from osmospark.frontier import FrontierEngine
     from osmospark.tableio import TableIO
@@ -351,88 +315,25 @@ def test_crawl_resume_matches_one_shot(spark, tmp_path, seen_mode):
     spec = {"payload": "div"}
 
     io = TableIO(str(tmp_path / "s"), spark)
-    eng = FrontierEngine(spark, pages, state=io, dedup=True, politeness=True,
-                         seen_mode=seen_mode)
+    eng = FrontierEngine(spark, pages, state=io, dedup=True, politeness=True)
     eng.run_crawl(seeds, "li > a", extract_spec=spec,
                   max_depth=6, max_rounds=2)
 
     io2 = TableIO(str(tmp_path / "s"), spark)
     last = io2.last_round("frontier")
     eng2 = FrontierEngine(spark, pages, state=io2, dedup=True,
-                          politeness=True, seen_mode=seen_mode)
+                          politeness=True)
     rec2, _ = eng2.run_crawl(
         [], "li > a", extract_spec=spec, max_depth=6, max_rounds=2,
         resume_frontier=io2.read_round("frontier", last),
         start_round=last + 1)
 
-    eng3 = FrontierEngine(spark, pages, dedup=True, politeness=True,
-                          seen_mode=seen_mode)
+    eng3 = FrontierEngine(spark, pages, dedup=True, politeness=True)
     rec3, _ = eng3.run_crawl(seeds, "li > a", extract_spec=spec,
                              max_depth=6, max_rounds=4)
     resumed = {r.url for r in rec2.select("url").collect()}
     one_shot = {r.url for r in rec3.select("url").collect()}
     assert resumed == one_shot
-
-
-# ----------------------------------------------------------------------
-# cuckoo-filter URL-seen backend (frontier/cuckoo.py)
-# ----------------------------------------------------------------------
-
-def test_cuckoo_filter_no_false_negatives_and_low_fp():
-    """CoNEXT'14 cuckoo filter invariants: every inserted key answers
-    'maybe seen' (no false negatives — the property crawl exactness
-    rides on), and the false-positive rate at 16-bit fingerprints stays
-    far below Bloom's ~1%."""
-    import numpy as np
-    from osmospark.frontier import cuckoo
-
-    rng = np.random.default_rng(7)
-    keys = np.unique(rng.integers(-2**62, 2**62, 50_000, dtype=np.int64))
-    t = cuckoo.build(keys)
-    assert cuckoo.contains(t, keys).all()
-    probe = np.unique(rng.integers(-2**62, 2**62, 100_000, dtype=np.int64))
-    probe = np.setdiff1d(probe, keys)
-    fp_rate = cuckoo.contains(t, probe).mean()
-    assert fp_rate < 0.005, fp_rate
-
-
-def test_cuckoo_filter_grows_on_saturation():
-    """add_many signals saturation (None) instead of dropping keys; the
-    build() rebuild path doubles until everything places — the exact
-    array carried in the state row makes the rebuild exact."""
-    import numpy as np
-    from osmospark.frontier import cuckoo
-
-    rng = np.random.default_rng(11)
-    keys = np.unique(rng.integers(-2**62, 2**62, 5_000, dtype=np.int64))
-    t = cuckoo.empty_table(64)  # way undersized: forces saturation
-    assert cuckoo.add_many(t.copy(), keys) is None
-    grown = cuckoo.build(keys)
-    assert grown.shape[0] > t.shape[0]
-    assert cuckoo.contains(grown, keys).all()
-
-
-def test_cuckoo_mode_matches_auto_and_keeps_state_off_driver(spark):
-    """seen_mode='cuckoo': same partitioned executor-resident state rows
-    as bloom mode, same visit set as the exact anti-join backend."""
-    from osmospark.corpus import synth_corpus_df, synth_seed_urls
-    from osmospark.frontier import FrontierEngine
-
-    pages = synth_corpus_df(spark, 400, 4, weight=1).cache()
-    pages.count()
-    seeds = synth_seed_urls(4)
-    auto = FrontierEngine(spark, pages, dedup=True)
-    rec_a, _ = auto.run_crawl(seeds, "li > a", extract_spec=None,
-                              max_depth=4)
-    ck = FrontierEngine(spark, pages, dedup=True, seen_mode="cuckoo",
-                        bloom_buckets=8)
-    rec_c, _ = ck.run_crawl(seeds, "li > a", extract_spec=None,
-                            max_depth=4)
-    urls_a = {r.url for r in rec_a.select("url").collect()}
-    urls_c = {r.url for r in rec_c.select("url").collect()}
-    assert urls_a == urls_c and len(urls_a) > 10
-    state_rows = ck._seen_state.count()
-    assert 0 < state_rows <= 8
 
 
 # ----------------------------------------------------------------------
@@ -507,39 +408,6 @@ def test_engine_applies_rfc_rules_jvm_side(spark):
     assert kept == expected
     assert "/d/15" in kept and "/d/2" in kept and "/d/3" not in kept
     assert "/d/47" not in kept and "/d/31" in kept
-
-
-def test_cuckoo_filter_property_incremental_merge_sequence():
-    """Property test of the engine's merge discipline: arbitrary batches
-    inserted incrementally (rebuild-on-saturation, exactly as
-    _note_seen's merge does) never lose a key and never report a false
-    negative, for any batch sizes/orderings."""
-    from hypothesis import given, settings, strategies as st
-    import numpy as np
-    from osmospark.frontier import cuckoo
-
-    @settings(max_examples=25, deadline=None)
-    @given(st.lists(
-        st.lists(st.integers(min_value=-2**63, max_value=2**63 - 1),
-                 min_size=0, max_size=400),
-        min_size=1, max_size=6))
-    def run(batches):
-        table = None
-        seen = np.array([], dtype=np.int64)
-        for b in batches:
-            delta = np.unique(np.array(b, dtype=np.int64))
-            if table is None:
-                seen = delta
-                table = cuckoo.build(delta) if len(delta) else None
-                continue
-            new = np.setdiff1d(delta, seen)
-            seen = np.union1d(seen, delta)
-            t = cuckoo.add_many(table, new)
-            table = cuckoo.build(seen) if t is None else t
-        if table is not None and len(seen):
-            assert cuckoo.contains(table, seen).all()
-
-    run()
 
 
 def test_checkpoint_truncated_resets_catalyst_size_stats(spark):
